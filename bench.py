@@ -209,12 +209,14 @@ EXTRAS = [
 #: as such.
 PROBE_REFERENCE_SEC = 0.74
 
-#: Pinned MULTI-CORE probe (r10 verdict #6): PROBE_MT_PROCS (32, one
-#: per vCPU) processes running the same loop concurrently, wall-clock
-#: of the batch. The single-thread
-#: probe missed the r10 driver-run contention entirely (scalar ratios
-#: 1.13/1.18 while every shuffle-bound key inflated ~26% — neighbors
-#: stealing CORES, not cycles); parallel processes see exactly that.
+#: Pinned MULTI-CORE probe (r10 verdict #6): PROBE_MT_PROCS (one per
+#: vCPU, ``os.cpu_count()``) processes running the same loop
+#: concurrently, wall-clock of the batch. A fixed 32 ran 8x
+#: oversubscribed on a 4-vCPU box and read idle cores as contention.
+#: The single-thread probe missed the r10 driver-run contention
+#: entirely (scalar ratios 1.13/1.18 while every shuffle-bound key
+#: inflated ~26% — neighbors stealing CORES, not cycles); parallel
+#: processes see exactly that.
 #: Pinned RELATIVE to the scalar pin (BENCH_NOTES.md "Probe pinning",
 #: r11): measured mt_wall / scalar_ratio at one box state (1.41 s /
 #: 1.15), so both ratios read ~equal under pure cycle contention and
@@ -226,7 +228,7 @@ PROBE_REFERENCE_SEC = 0.74
 #: validated r11) — and Spark's 32 task threads see what the full-width
 #: probe sees.
 PROBE_MT_REFERENCE_SEC = 1.23
-PROBE_MT_PROCS = 32
+PROBE_MT_PROCS = os.cpu_count() or 1
 
 
 def cpu_probe() -> float:
@@ -249,7 +251,7 @@ def _probe_worker(_: int) -> int:
 
 
 def cpu_probe_mt() -> float:
-    """PROBE_MT_PROCS (32, one per vCPU) copies of the scalar loop in
+    """PROBE_MT_PROCS (one per vCPU) copies of the scalar loop in
     PARALLEL PROCESSES (the GIL makes
     threads useless as a multi-core probe), wall time of the whole
     batch. Spawn (not fork): the JVM is live between the two probe

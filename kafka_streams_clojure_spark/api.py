@@ -44,16 +44,6 @@ def value_joiner(f, out_col: str = "joined_value", *in_cols: str):
     return apply
 
 
-def key_value_mapper(key_expr: Column, *value_exprs: Column):
-    """``key-value-mapper`` parity (api.clj:96-100): a (k,v) → (k',v')
-    remap as a reusable transform."""
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.select(key_expr, *value_exprs)
-
-    return apply
-
-
 class KStream:
     """A fluent wrapper over a (bounded or unbounded) DataFrame."""
 

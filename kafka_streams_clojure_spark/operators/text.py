@@ -123,23 +123,6 @@ def shingles(text: Column, k: int = 4) -> Column:
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column family in one pass."""
-    c = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(c),
-            "n_chars_calc": char_count(c),
-            "mean_token_len": mean_token_len(c),
-            "distinct_ratio": distinct_ratio(c),
-            "stopword_ratio": stopword_ratio(c),
-            "lang_pred": lang_id(c),
-            "quality": quality_score(c),
-            "fp": fingerprint(c),
-        }
-    )
-
-
 def scrub(text: Column) -> Column:
     """PII/noise scrubbing for training text: mask emails, then URLs,
     then standalone long digit runs (6+, i.e. ids/phones — applied

@@ -44,10 +44,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return physical_plan(df).count("WholeStageCodegen")
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan — the scale-limiting
     metric. Counts the formatted plan's detail headers (`(n) Exchange`)
@@ -56,12 +52,6 @@ def shuffle_count(df: DataFrame) -> int:
     import re
 
     return len(re.findall(r"^\(\d+\) Exchange", physical_plan(df), re.MULTILINE))
-
-
-def broadcast_exchange_count(df: DataFrame) -> int:
-    import re
-
-    return len(re.findall(r"^\(\d+\) BroadcastExchange", physical_plan(df), re.MULTILINE))
 
 
 def unpartitioned_window_cols(df: DataFrame) -> list[str]:

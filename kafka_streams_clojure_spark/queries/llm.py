@@ -4059,8 +4059,6 @@ def q_multimodal_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_images,
     )
 
-    from kafka_streams_clojure_spark.operators._cache import persist_if_uncached
-
     docs = load_table(spark, sf_dir, "documents")
     # orig is consumed twice (union branch + resize input) but is NOT
     # persisted: after the r13 kernel vectorization the re-render is
@@ -6008,8 +6006,6 @@ def q_multimodal_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_near_dup_pairs,
         stepped_wav_blobs,
     )
-
-    from kafka_streams_clojure_spark.operators._cache import persist_if_uncached
 
     from kafka_streams_clojure_spark.operators._cache import persist_if_uncached
 

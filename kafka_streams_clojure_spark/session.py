@@ -6,6 +6,16 @@ join handling on, Arrow transfers on, UTC session timezone for
 oracle-comparable timestamps); only ``master`` and the partition count
 are local-mode artifacts, overridable via env.
 
+Fixture reads are memoized per session: :func:`load_table` keeps the
+read relation (plan, schema and file index — never rows) of every path
+it has read on the ``SparkSession`` object, so a session pays the
+parquet listing and schema inference once per path. An entry is reused
+only while the path's stat fingerprint (inode, mtime_ns and size of
+the file, or of every file under a directory dataset) is unchanged; a
+changed fingerprint replaces it with a fresh read. ``spark.stop()``,
+``newSession()`` and the next ``getOrCreate`` give a new session object
+and so start empty.
+
 Env knobs (driver contract):
 - ``SPARK_GRAFT_CPUS``   — local core count (default: all).
 - ``SPARK_GRAFT_SF_DIR`` — default fixture dir for ad-hoc runs.
@@ -14,6 +24,7 @@ Env knobs (driver contract):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -143,12 +154,70 @@ def normalize_event_time(df: DataFrame, cols) -> DataFrame:
     return df
 
 
+#: Attribute on the SparkSession object that holds its read memo:
+#: ``{resolved path: (stat fingerprint, raw relation)}``.
+_READ_MEMO_ATTR = "_graft_read_memo"
+
+
+def _stat_fingerprint(path: str):
+    """``(inode, mtime_ns, size)`` of a file; for a directory dataset,
+    the sorted ``(relative path, inode, mtime_ns, size)`` of every file
+    under it, so a part file rewritten in place, replaced, added or
+    removed changes it. ``None`` when ``os.stat`` cannot see the path
+    (s3a://, hdfs://)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            fs = os.stat(f)
+            files.append((os.path.relpath(f, path), fs.st_ino, fs.st_mtime_ns, fs.st_size))
+    return tuple(sorted(files))
+
+
+def read_relation(spark: SparkSession, path: str) -> DataFrame:
+    """The raw ``spark.read.parquet`` relation of ``path`` (before
+    :func:`normalize_event_time`), read once per session and path while
+    the path's stat fingerprint holds; a changed fingerprint replaces
+    the entry. Paths ``os.stat`` cannot see are read every time."""
+    fingerprint = _stat_fingerprint(path)
+    if fingerprint is None:
+        return spark.read.parquet(path)
+    memo = spark.__dict__.setdefault(_READ_MEMO_ATTR, {})
+    key = os.path.realpath(path)
+    entry = memo.get(key)
+    if entry is None or entry[0] != fingerprint:
+        entry = memo[key] = (fingerprint, spark.read.parquet(path))
+    return entry[1]
+
+
+def _fresh_instance(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """The same relation (file index and schema shared, no listing)
+    under new attribute ids, so two reads of one table can still be
+    self-joined the way two separate ``spark.read`` calls could."""
+    jvm = spark.sparkContext._jvm
+    plan = df._jdf.queryExecution().analyzed().newInstance()
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan), spark)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (columnar parquet scan; Catalyst pushes
-    filters/projections down into the scan automatically)."""
+    filters/projections down into the scan automatically).
+
+    Memoized per session (see the module docstring): a repeat read of
+    an unchanged path costs no listing and no schema-inference job, and
+    each call returns the relation under fresh attribute ids. The
+    engine's session confs are re-applied on every call, hit or miss,
+    so a caller that resets the timezone or ``nanosAsLong`` in between
+    cannot change what the next read sees."""
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return normalize_event_time(df, _EVENT_TIME_COLS.get(name, ()))
+    raw = read_relation(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return normalize_event_time(_fresh_instance(spark, raw), _EVENT_TIME_COLS.get(name, ()))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

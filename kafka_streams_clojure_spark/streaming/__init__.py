@@ -33,7 +33,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_clojure_spark.session import _ensure_session_confs, load_table
+from kafka_streams_clojure_spark.session import _ensure_session_confs, load_table, read_relation
 
 
 _SCRATCH_ROOT: list[str] = []  # lazily created, removed at interpreter exit
@@ -81,13 +81,15 @@ def _as_stream_dir(sf_dir: str, name: str) -> str:
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Open a fixture table as an unbounded streaming DataFrame (file
-    source). Schema comes from the batch reader (streaming sources
-    can't infer), including the nanos→timestamp fixups for events."""
+    source). Schema comes from the batch relation (streaming sources
+    can't infer) — the raw, pre-fixup one from ``load_table``'s
+    per-session memo, so no extra inference job — and the
+    nanos→timestamp fixups for events are applied on the stream."""
     _ensure_session_confs(spark)
     from kafka_streams_clojure_spark.session import _EVENT_TIME_COLS, normalize_event_time
 
-    batch = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    stream = spark.readStream.schema(batch.schema).parquet(_as_stream_dir(sf_dir, name))
+    raw = read_relation(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    stream = spark.readStream.schema(raw.schema).parquet(_as_stream_dir(sf_dir, name))
     # shared event-time fixups (same mapping as session.load_table):
     # bigint nanos OR naive timestamp_ntz -> TimestampType
     return normalize_event_time(stream, _EVENT_TIME_COLS.get(name, ()))
