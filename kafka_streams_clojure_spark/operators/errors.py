@@ -102,9 +102,16 @@ def dlq_map_in_pandas(
                     g["__error"] = None
                     frames.append(g)
                 if bad_ids:
-                    b = pd.DataFrame({id_col: bad_ids})
-                    for c in others:
-                        b[c] = None
+                    if good:
+                        # null rows in the good frame's dtypes: an
+                        # all-None object column in the concat would
+                        # drive its dtype resolution
+                        b = g.iloc[:0].reindex(range(len(bad_ids)))
+                        b[id_col] = bad_ids
+                    else:
+                        b = pd.DataFrame({id_col: bad_ids})
+                        for c in others:
+                            b[c] = None
                     b["__error"] = bad_errs
                     frames.append(b)
                 if frames:

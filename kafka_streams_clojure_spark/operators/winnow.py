@@ -34,8 +34,9 @@ def _window_hashes(data: np.ndarray, k: int) -> np.ndarray:
     the modulus) — a sliding dot product against the power vector."""
     pows = np.empty(k, dtype=np.uint64)
     pows[k - 1] = np.uint64(1)
-    for j in range(k - 2, -1, -1):
-        pows[j] = pows[j + 1] * _BASE
+    with np.errstate(over="ignore"):
+        for j in range(k - 2, -1, -1):
+            pows[j] = pows[j + 1] * _BASE
     windows = np.lib.stride_tricks.sliding_window_view(data, k).astype(np.uint64)
     return (windows * pows[None, :]).sum(axis=1, dtype=np.uint64)
 

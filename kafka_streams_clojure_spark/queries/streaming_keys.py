@@ -99,16 +99,17 @@ def q_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom per-key state via applyInPandasWithState (Stores-API
-    parity, README.md:66-68). One AvailableNow batch → emitted totals
-    equal the batch aggregate. Float sums inside pandas are summed per
-    key in arrival order; to stay oracle-exact the value total is
-    recomputed decimal-exactly on the emitted output."""
+    """Per-key running (count, sum) in engine state (Stores-API
+    parity, README.md:66-68), run as Spark's native streaming
+    aggregate. One AvailableNow batch → emitted totals equal the batch
+    aggregate. The state's double sum depends on partial-aggregate
+    order; to stay oracle-exact the value total is recomputed
+    decimal-exactly on the emitted output."""
     ev = stream_table(spark, sf_dir, "events")
     out = run_available_now(running_counter(ev), output_mode="update")
-    # pandas float accumulation is order-dependent; re-derive the exact
-    # total from the batch table for the comparison surface while the
-    # streaming path proves the state machinery.
+    # a double sum is partial-aggregate-order dependent; re-derive the
+    # exact total from the batch table for the comparison surface while
+    # the streaming path proves the state store (n per key).
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("key"))

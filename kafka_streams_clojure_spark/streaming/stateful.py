@@ -3,14 +3,16 @@
 The reference's declared goal: "stateful transducers ... over Kafka
 Streams state stores" for joins/windowed aggregates/custom state
 (reference README.md:66-68); each transducer instance owns per-task
-state (api.clj:41-45). Spark mapping: ``applyInPandasWithState`` —
-per-key state managed by the engine's state store, Arrow-batched user
-logic, watermark-driven timeouts instead of the stubbed ``punctuate``
-(api.clj:26).
+state (api.clj:41-45). Spark mapping, by the shape of the fold:
 
-Kept deliberately small (SURVEY §7 watch-list item 6): one running
-aggregator that demonstrates the full state lifecycle; arbitrary user
-folds plug into the same shape.
+- algebraic folds (count/sum over a key, :func:`running_counter`)
+  compile to Spark's native streaming aggregate — map-side partial
+  aggregation and a JVM state store, no Python worker;
+- state machines (as-of join, funnel, punctuate, scd2, the capped
+  sessionizer) use ``applyInPandasWithState`` — per-key state managed
+  by the engine's state store, Arrow-batched user logic,
+  watermark-driven timeouts instead of the stubbed ``punctuate``
+  (api.clj:26).
 """
 
 from __future__ import annotations
@@ -33,37 +35,30 @@ def running_counter(
     micro-batches; emits the updated totals for every key seen in the
     batch — the KS `aggregate`-with-store analog.
 
-    State is two scalars per key — constant memory per key regardless
-    of stream length, the shape that scales to 100 TB of throughput.
+    A count/sum fold is algebraic, so it runs as Spark's own
+    incremental aggregate in update mode: a map-side partial aggregate
+    per batch, merged into a JVM state store of two scalars per key —
+    constant memory per key regardless of stream length, and no Python
+    worker on the path.
+
+    Contract (output ``key <type of key_col>, n long, total double``):
+
+    - a null key forms its own group;
+    - ``n`` counts every row, including rows whose value is null or NaN;
+    - ``total`` sums the value cast to double, skipping null and NaN,
+      and is ``0.0`` when a key has no other values.
+
+    The double ``total`` depends on partial-aggregate order; exact
+    comparisons re-derive it with a decimal sum (``q_stream_stateful_counter``).
+    A checkpoint written by the former ``applyInPandasWithState`` counter
+    cannot be resumed: the state schema changed.
     """
-
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total = state.get
-        else:
-            n, total = 0, 0.0
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"key": [key[0]], "n": [n], "total": [total]})
-
-    # output key type follows the input column (a hardcoded `long`
-    # would corrupt string/other keys); the value is normalized to
-    # double up front so the pandas float accumulation is well-typed.
-    key_type = dict(events.dtypes)[key_col]
-    return (
-        events.select(F.col(key_col), F.col(value_col).cast("double").alias(value_col))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=f"key {key_type}, n long, total double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    v = F.col(value_col).cast("double")
+    return events.groupBy(F.col(key_col).alias("key")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.nanvl(v, F.lit(None).cast("double"))), F.lit(0.0)
+        ).alias("total"),
     )
 
 

@@ -98,6 +98,37 @@ def test_running_counter_string_key(spark, sf_dir):
     assert got == want
 
 
+def test_running_counter_null_key_and_nan_values(spark, tmp_path):
+    """Null key = its own group; n counts every row (null/NaN values
+    included); total skips null and NaN and is 0.0 for a key with no
+    other values — a bare sum would turn key 3's NaN into a NaN total."""
+    import uuid
+
+    from kafka_streams_clojure_spark.streaming.stateful import running_counter
+
+    schema = "k long, v double"
+    rows = [(1, 1.0), (1, None), (2, None), (2, None), (None, 5.0),
+            (None, 2.0), (3, float("nan")), (3, 4.0)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    name = f"rc_{uuid.uuid4().hex[:8]}"
+    q = (
+        running_counter(stream, key_col="k", value_col="v")
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    got = {r.key: (r.n, r.total) for r in spark.table(name).collect()}
+    assert got == {1: (2, 1.0), 2: (2, 0.0), 3: (2, 4.0), None: (2, 7.0)}
+
+
 def test_branch_null_predicate_falls_through(spark):
     """A record whose earlier predicate evaluates to SQL NULL must fall
     through to the first matching later branch (KS: non-TRUE = no

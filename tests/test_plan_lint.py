@@ -165,7 +165,6 @@ _PYTHON_OK = {
     # exchange of the windowed twin; oracle-gated (md5 identity)
     "q_llm_cdc_chunks_kernel",
     "q_llm_cdc_chunks_hashed",  # same kernel, 8-byte truncated-md5 keys
-    "q_stream_stateful_counter",
     # capped sessionization: duration-cap semantics are sequential per
     # user (no window form); r10 shape = mapInPandas over user-sorted
     # partitions running the per-session numpy kernel

@@ -6,8 +6,9 @@ RocksDB provider (in Spark core since 3.2) spills state to local SSD
 with incremental checkpointing. The engine's operators must be
 provider-agnostic: same results, no code changes, flip one conf.
 
-These tests run the engine's own stateful paths — the
-applyInPandasWithState running counter and the streaming
+These tests run the engine's own stateful paths — the running
+counter (Spark's native streaming aggregate), the funnel state machine
+(``applyInPandasWithState``) and the streaming
 dropDuplicatesWithinWatermark dedup — under
 ``RocksDBStateStoreProvider`` and pin (a) result equality with the
 batch oracle, and (b) that RocksDB actually engaged (.sst/.zip
@@ -71,8 +72,9 @@ def _assert_rocksdb_engaged(ck: str) -> None:
 
 
 def test_stateful_counter_matches_batch_under_rocksdb(spark, sf_dir, rocksdb_ck):
-    """The Stores-API counter (applyInPandasWithState) under RocksDB:
-    per-key n and decimal-exact totals equal the batch aggregate."""
+    """The Stores-API counter (native streaming aggregate) under
+    RocksDB: per-key n and decimal-exact totals equal the batch
+    aggregate."""
     import __spark_entry__ as entrymod
 
     got = {
@@ -89,6 +91,23 @@ def test_stateful_counter_matches_batch_under_rocksdb(spark, sf_dir, rocksdb_ck)
         .collect()
     }
     assert got == exact and len(got) > 0
+    _assert_rocksdb_engaged(rocksdb_ck)
+
+
+def test_pandas_state_funnel_matches_oracle_under_rocksdb(
+    spark, duck, sf_dir, rocksdb_ck
+):
+    """The applyInPandasWithState path under RocksDB: the funnel state
+    machine's per-user stages equal the key's batch (DuckDB) answer."""
+    import __spark_entry__ as entrymod
+    from tests.oracle_harness import compare
+
+    name = "q_stream_funnel"
+    compare(
+        entrymod.queries()[name](spark, sf_dir),
+        duck.sql(entrymod.oracle_sql()[name]),
+        name,
+    )
     _assert_rocksdb_engaged(rocksdb_ck)
 
 

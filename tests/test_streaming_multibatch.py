@@ -47,7 +47,8 @@ def _stream_split(spark, split_dir, schema):
 def test_stateful_counter_across_batches(spark, sf_dir, split_events_dir):
     """running_counter over 4 micro-batches: the LAST emission per key
     must equal the batch aggregate over all data — state survived and
-    accumulated across batches."""
+    accumulated across batches — and the fold runs as Spark's native
+    stateful aggregate, not pandas grouped state."""
     batch_ev = load_table(spark, sf_dir, "events")
     stream = _stream_split(spark, split_events_dir, batch_ev.schema)
 
@@ -57,11 +58,14 @@ def test_stateful_counter_across_batches(spark, sf_dir, split_events_dir):
     try:
         q.processAllAvailable()
         n_batches = len(q.recentProgress)
+        plan = q._jsq.explainInternal(False)
     finally:
         q.stop()
         q.awaitTermination(30)
 
     assert n_batches >= 4, f"expected >=4 micro-batches, got {n_batches}"
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
     # last emission per key (keys can be emitted in several batches;
     # the final n is the max since counts only grow)
     emitted = spark.table(name).groupBy("key").agg(F.max("n").alias("n"))
