@@ -16,6 +16,11 @@ Scale design (the whole point of these ops is 100 TB of documents):
 - **SimHash**: 64-bit bit-majority signature per doc via explode +
   bit-count aggregation (pure built-ins); near-dups = equal signature
   bands (Hamming blocking).
+
+Every word window here (shingles, passages) comes from
+:func:`operators.text.token_windows`: each document is tokenized once
+and its windows are read from the token array in the same row, with no
+shuffle, sort or window function.
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_clojure_spark.operators._cache import persist_if_uncached
 
-from kafka_streams_clojure_spark.operators.text import fingerprint
+from kafka_streams_clojure_spark.operators.text import fingerprint, token_windows
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -42,64 +47,21 @@ def shingle_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     """(id, set_size, shingle) rows, distinct per doc — the set
     representation for Jaccard/MinHash.
 
-    Generation is fully codegen'd: posexplode tokens, build each
-    k-shingle with window ``lead``s (higher-order array lambdas like
-    transform/slice run interpreted, ~10× slower), dedupe per doc with
-    ``collect_set`` on the same partitioning. Docs with <= k tokens
-    contribute their whole (normalized) text as one shingle — the same
-    contract as :func:`operators.text.shingles`.
+    Shingles are the full k-token windows of
+    :func:`operators.text.token_windows`. A doc with <= k tokens keeps
+    only its first window, which is its whole (normalized) text. One
+    scan, no shuffle before the per-doc ``collect_set``, which is the
+    only exchange and defines the set: rows sharing an id merge, and
+    null text gives no rows.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(text_col), r"\s+")).alias("__n"),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("__pos", "__tok"),
-        )
-        # Pin the window's partitioning explicitly: the exploded rows are
-        # tiny, so AQE would otherwise coalesce the window shuffle down to
-        # one partition and serialize the sort+lead stage.
-        .repartition(par, id_col)
+    sh = token_windows(df, k, id_col, text_col).filter(
+        F.col("pos") <= F.greatest(F.col("n") - k, F.lit(0))
     )
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    shingle = F.concat_ws(
-        " ", F.col("__tok"), *[F.lead("__tok", j).over(w) for j in range(1, k)]
+    return (
+        sh.groupBy(id_col)
+        .agg(F.collect_set("window").alias("sh"))
+        .select(F.col(id_col), F.size("sh").alias("set_size"), F.explode("sh").alias("shingle"))
     )
-    full = (
-        toks.filter(F.col("__n") > k)
-        .select(F.col(id_col), F.col("__n"), shingle.alias("shingle"), F.col("__pos"))
-        .filter(F.col("__pos") + k <= F.col("__n"))
-        .select(id_col, "shingle")
-    )
-    # r12 (guide §2.4 — reuse the exchange): the per-doc dedupe
-    # aggregates the WINDOWED side directly on the id partitioning the
-    # repartition above already established (HashAggregate, no second
-    # exchange). Short docs (≤ k tokens) contribute exactly ONE shingle
-    # — their collect_set is trivially {whole text} with set_size 1 —
-    # so they union in AFTER the aggregate, pre-aggregated, instead of
-    # forcing the union'd stream through a fresh full shuffle. Output
-    # rows identical (the sides are disjoint: __n > k vs __n <= k);
-    # every Jaccard/MinHash/containment consumer drops one
-    # shingle-width exchange.
-    full_sets = (
-        full.groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("sh"))
-        .select(
-            F.col(id_col), F.size("sh").alias("set_size"), F.explode("sh").alias("shingle")
-        )
-    )
-    short = (
-        df.select(
-            F.col(id_col),
-            F.lit(1).alias("set_size"),
-            F.array_join(F.split(F.col(text_col), r"\s+"), " ").alias("shingle"),
-        )
-        .filter(F.size(F.split(F.col(text_col), r"\s+")) <= k)
-        # null-text docs produced NO rows under the old collect_set
-        # (collect_set drops nulls) — keep that contract
-        .filter(F.col("shingle").isNotNull())
-    )
-    return full_sets.unionByName(short)
 
 
 def _shingle_pair_counts(
@@ -786,33 +748,16 @@ def passage_table(
     passage_words: int = 10,
 ) -> DataFrame:
     """(id, pidx, passage) rows: consecutive non-overlapping
-    ``passage_words``-word windows per document, in order. Fully
-    codegen'd — the :func:`shingle_sets` posexplode + window-``lead``
-    pattern with stride ``passage_words`` (``concat_ws`` skips the
-    null leads past end-of-doc, yielding the short tail passage for
-    free). Shared by :func:`passage_dedup` and
+    ``passage_words``-word windows per document, in order — the
+    :func:`operators.text.token_windows` of width and stride
+    ``passage_words``, the last one short when the token count is not a
+    multiple. No shuffle. Shared by :func:`passage_dedup` and
     :func:`intra_doc_dedup`."""
     w_ = passage_words
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("__pos", "__tok"),
-        )
-        # Pin the window partitioning: AQE would coalesce the tiny
-        # exploded rows into one partition and serialize the sort.
-        .repartition(par, id_col)
-    )
-    win = Window.partitionBy(id_col).orderBy("__pos")
-    passage = F.concat_ws(
-        " ", F.col("__tok"), *[F.lead("__tok", j).over(win) for j in range(1, w_)]
-    )
-    return (
-        toks.select(F.col(id_col), F.col("__pos"), passage.alias("passage"))
-        .filter(F.col("__pos") % w_ == 0)
-        .select(
-            F.col(id_col), (F.col("__pos") / w_).cast("bigint").alias("pidx"), "passage"
-        )
+    return token_windows(df, w_, id_col, text_col, step=w_).select(
+        F.col(id_col),
+        (F.col("pos") / w_).cast("bigint").alias("pidx"),
+        F.col("window").alias("passage"),
     )
 
 
@@ -835,11 +780,8 @@ def passage_dedup(
 
     Returns ``(id_col, clean_text, n_kept, n_dropped)``.
 
-    Scale shape (100 TB): passage generation is the codegen
-    posexplode + window-``lead`` pattern from :func:`shingle_sets`
-    (stride ``passage_words`` instead of 1 — ``concat_ws`` skipping
-    the null leads past end-of-doc yields the short tail passage for
-    free). The doc-frequency table is NOT broadcast — distinct
+    Scale shape (100 TB): passages come from :func:`passage_table`
+    with no shuffle. The doc-frequency table is NOT broadcast — distinct
     passages scale with the corpus — so the frequency probe is a
     shuffled equi-join. ``hash_key=True`` is the production path: the
     probe aggregates and joins on ``xxhash64(passage)`` (8 bytes/row
@@ -847,9 +789,9 @@ def passage_dedup(
     two passages' doc-freqs at ~2^-64 per pair — harmless for a
     boilerplate cut, unacceptable only for an exactness oracle, which
     is why the oracle-gated key keeps the default string key).
-    Reassembly sorts each doc's surviving passages with a codegen
-    ``array_sort`` over (index, passage) structs — no interpreted
-    lambdas, no driver collect.
+    Reassembly sorts each doc's surviving passages with an
+    ``array_sort`` over (index, passage) structs — no driver
+    collect.
     """
     passages = persist_if_uncached(
         passage_table(df, id_col, text_col, passage_words)
@@ -904,10 +846,11 @@ def intra_doc_dedup(
     Returns ``(id_col, clean_text, n_kept, n_dropped)`` for every
     document (an unrepetitive doc round-trips unchanged).
 
-    Scale shape (100 TB): entirely per-document — passage build, the
-    min-pidx window, and reassembly all share the ``id_col``
-    partitioning, so the whole operator is ONE shuffle keyed by doc
-    id; no corpus-wide frequency table, no cross-doc exchange at all.
+    Scale shape (100 TB): entirely per-document — passages come from
+    :func:`passage_table` with no shuffle; every later exchange is
+    keyed by doc id (the min-pidx window by doc id and passage, the
+    reassembly and count aggregates by doc id); no corpus-wide
+    frequency table, no cross-doc exchange at all.
     """
     passages = passage_table(df, id_col, text_col, passage_words)
     win = Window.partitionBy(id_col, "passage")
@@ -988,64 +931,34 @@ def winnowing_fingerprints(
     floor for shuffle bytes).
 
     Returns (id, fp) DISTINCT rows. Same shingle conventions as
-    :func:`shingle_sets` (k-word shingles via codegen'd window leads;
-    docs with <= k tokens contribute their whole re-joined text), and
+    :func:`shingle_sets` (the full k-token windows of
+    :func:`operators.text.token_windows`; docs with <= k tokens
+    contribute their whole re-joined text), and
     the engine-portable md5-prefix hash (the `_PAIR_H`/`_neg_bucket`
     parity idiom) so a DuckDB oracle reproduces every fingerprint
     bit-for-bit. Docs with fewer than ``window`` shingles keep the
     minimum over what they have — every doc emits >= 1 fingerprint,
     the standard winnowing boundary rule.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(text_col), r"\s+")).alias("__n"),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("__pos", "__tok"),
-        )
-        .repartition(par, id_col)
-    )
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    shingle = F.concat_ws(
-        " ", F.col("__tok"), *[F.lead("__tok", j).over(w) for j in range(1, k)]
-    )
-    full = (
-        toks.filter(F.col("__n") > k)
+    hashed = (
+        token_windows(df, k, id_col, text_col)
+        .filter(F.col("pos") <= F.greatest(F.col("n") - k, F.lit(0)))
         .select(
             F.col(id_col),
-            (F.col("__n") - (k - 1)).alias("__nsh"),
-            F.col("__pos"),
-            shingle.alias("sh"),
-        )
-        .filter(F.col("__pos") + k <= F.col("__n"))
-    )
-    short = (
-        df.filter(F.size(F.split(F.col(text_col), r"\s+")) <= k)
-        .select(
-            F.col(id_col),
-            F.lit(1).alias("__nsh"),
-            F.lit(0).alias("__pos"),
-            F.array_join(F.split(F.col(text_col), r"\s+"), " ").alias("sh"),
+            F.greatest(F.col("n") - (k - 1), F.lit(1)).alias("__nsh"),
+            F.col("pos").alias("__pos"),
+            F.conv(F.substring(F.md5("window"), 1, 8), 16, 10).cast("bigint").alias("__h"),
         )
     )
-    hashed = full.unionByName(short).withColumn(
-        "__h", F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("bigint")
-    )
-    # min over each `window` consecutive shingles; docs with fewer
-    # shingles than the window take the min over all of them
+    # min over each `window` consecutive shingles; a doc with fewer
+    # shingles than the window keeps one frame, the min over all of them
     wmin = Window.partitionBy(id_col).orderBy("__pos").rowsBetween(0, window - 1)
-    fps_windowed = (
-        hashed.filter(F.col("__nsh") >= window)
-        .withColumn("__m", F.min("__h").over(wmin))
-        .filter(F.col("__pos") <= F.col("__nsh") - window)
+    return (
+        hashed.withColumn("__m", F.min("__h").over(wmin))
+        .filter(F.col("__pos") <= F.greatest(F.col("__nsh") - window, F.lit(0)))
         .select(F.col(id_col), F.col("__m").alias("fp"))
+        .distinct()
     )
-    fps_short = (
-        hashed.filter(F.col("__nsh") < window)
-        .groupBy(id_col)
-        .agg(F.min("__h").alias("fp"))
-    )
-    return fps_windowed.unionByName(fps_short).distinct()
 
 
 def substring_dedup(
@@ -1079,12 +992,12 @@ def substring_dedup(
     the passage_dedup lineage contract.
 
     Scale shape (100 TB): there is NO pair join anywhere — unlike the
-    fingerprint-pair families this is: shingle build (codegen
-    posexplode + window leads), ONE shuffle by shingle for the
-    duplicated-occurrence window (count + first-occurrence rank; a
-    boilerplate shingle costs its occurrence count linearly, never
-    count²), a coverage explode of ×k, and doc-keyed run/rebuild
-    windows on the pinned-repartition partitioning. Everything is
+    fingerprint-pair families this is: token and shingle rows from
+    one :func:`operators.text.token_windows` pass (no shuffle), ONE
+    shuffle by shingle for the duplicated-occurrence window (count +
+    first-occurrence rank; a boilerplate shingle costs its occurrence
+    count linearly, never count²), a coverage explode of ×k, and
+    doc-keyed run/rebuild windows. Everything is
     engine-portable integers/strings, so the whole removal is
     DuckDB-oracle-exact (q_llm_substring_dedup). ``hash_key=True`` is
     the production wire shape (the passage_dedup precedent): the
@@ -1093,24 +1006,9 @@ def substring_dedup(
     a 64-bit collision conflating two shingles is ~2^-64/pair
     (rows-only key, equivalence-tested against the string twin).
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = persist_if_uncached(
-        df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(text_col), r"\s+")).alias("__n"),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos", "tok"),
-        ).repartition(par, id_col)
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    occ = (
-        toks.withColumn(
-            "s",
-            F.concat_ws(
-                " ", F.col("tok"), *[F.lead("tok", j).over(w) for j in range(1, k)]
-            ),
-        )
-        .filter(F.col("pos") + k <= F.col("__n"))
-        .select(id_col, "pos", "s")
+    toks = persist_if_uncached(token_windows(df, k, id_col, text_col))
+    occ = toks.filter(F.col("pos") + k <= F.col("n")).select(
+        id_col, "pos", F.col("window").alias("s")
     )
     if hash_key:
         occ = occ.select(id_col, "pos", F.xxhash64("s").alias("s"))

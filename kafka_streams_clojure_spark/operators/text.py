@@ -1,10 +1,14 @@
 """Text-analysis operators for LLM training-data pipelines (`[ext]`,
 SURVEY.md §2.11 / north-star mandate).
 
-All hot paths are Catalyst built-ins (split/higher-order lambdas/md5) —
-no Python in the per-row path, so these run whole-stage-codegen'd over
-100 TB of documents. Each operator returns expression columns so they
-compose into any pipeline.
+All hot paths are Catalyst built-ins (split/md5/array functions) — no
+Python in the per-row path, so these run whole-stage-codegen'd over
+100 TB of documents. The exception is a higher-order array lambda
+(``transform``/``filter``/``aggregate``/``array_sort`` with a
+comparator): in Spark 4.1 those expressions are ``CodegenFallback``
+and evaluate interpreted inside the generated stage, so hot paths read
+arrays by index instead (:func:`token_windows`). Most operators return
+expression columns so they compose into any pipeline.
 """
 
 from __future__ import annotations
@@ -31,6 +35,57 @@ def tokens(text: Column) -> Column:
     """Whitespace tokenizer (the fixtures are space-separated; a
     BPE-ish regex split is `tokens_regex`)."""
     return F.split(text, r"\s+")
+
+
+def token_windows(
+    df: DataFrame,
+    k: int,
+    id_col: str = "doc_id",
+    text: str | Column = "text",
+    step: int = 1,
+) -> DataFrame:
+    """``(id_col, pos, n, tok, window)`` rows, one per ``step``-th token
+    position of each row's :func:`tokens` array: ``n`` is the row's
+    token count, ``tok`` the token at ``pos`` and ``window`` the ``k``
+    tokens from ``pos`` joined by one space. Near the end of a row the
+    window is shorter: ``concat_ws`` skips the out-of-range reads, which
+    are null. Callers keep the positions they need, e.g.
+    ``pos + k <= n`` for full windows. Null text yields no rows; empty
+    text is one empty token.
+
+    Each row is tokenized once, into an array that only the generator
+    and the projection right above it read. Window token ``j`` is the
+    array read at ``pos + j``. There is no shuffle, no sort and no
+    window function, so the work is linear in the row's length, and
+    each output row carries only its window, never the array or the
+    text. The generator is ``explode(sequence(0, n - 1, step))``, not
+    ``posexplode`` of the array: Catalyst infers a ``size(arr) > 0 AND
+    isnotnull(arr)`` filter for a generator whose input is a bare
+    attribute and pushes it below the projection, which would run the
+    tokenizer twice more per row.
+
+    The windows of two rows that share an id stay separate: any
+    per-id set (``groupBy(id).collect_set``) is the union of the rows'
+    windows.
+    """
+    arr = F.col("__arr")
+    pos = F.col("pos")
+    text_col = F.col(text) if isinstance(text, str) else text
+    return (
+        df.select(F.col(id_col), tokens(text_col).alias("__arr"))
+        .select(
+            F.col(id_col),
+            arr,
+            F.explode(F.sequence(F.lit(0), F.array_size(arr) - 1, F.lit(step))).alias("pos"),
+        )
+        .select(
+            F.col(id_col),
+            pos,
+            F.array_size(arr).alias("n"),
+            F.get(arr, pos).alias("tok"),
+            F.concat_ws(" ", *[F.get(arr, pos + j) for j in range(k)]).alias("window"),
+        )
+    )
 
 
 def tokens_regex(text: Column) -> Column:
@@ -110,9 +165,12 @@ def fingerprint(text: Column) -> Column:
 
 
 def shingles(text: Column, k: int = 4) -> Column:
-    """Word k-shingles as strings — the unit set for Jaccard/MinHash
-    near-dup. Generated with sequence+transform (codegen'd, no UDF);
-    docs shorter than k tokens yield their whole text as one shingle."""
+    """Word k-shingles of one row as an array column — the unit set for
+    Jaccard/MinHash near-dup; docs shorter than k tokens yield their
+    whole text as one shingle. An expression, so it composes anywhere,
+    but its ``transform`` lambda runs interpreted (``CodegenFallback``
+    in Spark 4.1); the dedup operators take the same shingles as rows
+    from :func:`token_windows`."""
     t = tokens(text)
     n = F.size(t)
     return F.when(n <= k, F.array(F.array_join(t, " "))).otherwise(
@@ -153,46 +211,39 @@ def repetition_stats(
     Docs with < 2 tokens have no bigrams and are excluded (the
     filter-by-threshold consumer treats missing as "keep").
 
-    Plan shape: one posexplode of the token stream, ONE shuffle keyed
-    by ``id_col`` (pinned repartition — the exploded rows are tiny and
-    AQE would coalesce the window sort to one partition), then two
-    same-key aggregates Catalyst plans without a further exchange.
-    Bigrams use the codegen window-``lead`` idiom, not interpreted
-    array lambdas. All ratios are exact-integer counts divided once in
-    IEEE double — engine-portable.
+    Plan shape: the token rows and bigrams are one
+    :func:`token_windows` pass (k = 2), with no shuffle of its own; the
+    token counts are one aggregate by ``id_col``, the bigram counts one
+    by (``id_col``, bigram) and then one by ``id_col``. All ratios are
+    exact-integer counts divided once in IEEE double —
+    engine-portable.
 
     ``bigrams=False`` returns only ``dup_token_ratio`` and skips the
     whole per-(doc, bigram) aggregate — consumers that filter on the
-    token ratio alone (the curation pipeline) shouldn't pay for a
-    window + two aggregates Catalyst cannot prune out of the join."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.size(F.split(F.col(text_col), r"\s+")).alias("__n"),
-            F.posexplode(F.split(F.col(text_col), r"\s+")).alias("__pos", "__tok"),
-        )
-        .filter(F.col("__n") >= 2)
-        .repartition(par, id_col)
-    )
+    token ratio alone (the curation pipeline) shouldn't pay for two
+    aggregates Catalyst cannot prune out of the join."""
+    toks = token_windows(df, 2, id_col, text_col)
     dup_ratio = (
         F.lit(1.0)
         - F.col("n_distinct").cast("double") / F.col("n_tok").cast("double")
     ).alias("dup_token_ratio")
-    tok_stats = toks.groupBy(id_col).agg(
-        F.count("*").alias("n_tok"),
-        F.count_distinct("__tok").alias("n_distinct"),
+    # Rows with < 2 tokens drop out inside the aggregate, not by a row
+    # filter: Catalyst pushes a filter on ``n`` below the generator,
+    # where it tokenizes every row a second time.
+    counted = F.col("n") >= 2
+    tok_stats = (
+        toks.groupBy(id_col)
+        .agg(
+            F.count(F.when(counted, 1)).alias("n_tok"),
+            F.size(F.collect_set(F.when(counted, F.col("tok")))).alias("n_distinct"),
+        )
+        .filter(F.col("n_tok") > 0)
     )
     if not bigrams:
         return tok_stats.select(id_col, dup_ratio)
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    bigram = F.concat_ws(" ", F.col("__tok"), F.lead("__tok", 1).over(w))
     per_bigram = (
-        toks.select(
-            F.col(id_col), F.col("__pos"), F.col("__n"), bigram.alias("bg")
-        )
-        .filter(F.col("__pos") + 2 <= F.col("__n"))
-        .groupBy(id_col, "bg")
+        toks.filter(F.col("pos") + 2 <= F.col("n"))
+        .groupBy(id_col, "window")
         .agg(F.count("*").alias("cnt"))
     )
     bg_stats = per_bigram.groupBy(id_col).agg(

@@ -99,3 +99,57 @@ def unpartitioned_window_cols(df: DataFrame) -> list[str]:
             out.add(re.sub(r"#\d+", "", arg[: m.start()]).strip())
         pos = i
     return sorted(out)
+
+
+def _balanced(text: str, start: int) -> str:
+    """``text[start:]`` up to the parenthesis that closes the first
+    ``(`` at or after ``start``."""
+    depth = 0
+    for i in range(text.index("(", start), len(text)):
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        if depth == 0:
+            return text[start : i + 1]
+    return text[start:]
+
+
+def retokenized_generates(plan: str) -> list[str]:
+    """Tokenizers evaluated again above the generator that explodes
+    them, in a :func:`physical_plan` string.
+
+    For every ``Generate`` whose generator reads a ``split(...)``
+    directly, returns that expression if a node above the Generate (an
+    ancestor in the plan tree) evaluates the same expression: the
+    ``select(size(split(t)), posexplode(split(t)))`` shape, which keeps
+    ``t`` in every generated row and tokenizes it again for each one,
+    i.e. quadratically in the row's length."""
+    import re
+
+    parent: dict[int, int] = {}
+    stack: list[tuple[int, int]] = []  # (indent, node id) of the open path
+    for line in plan.split("\n\n", 1)[0].splitlines():  # the plan tree
+        m = re.search(r"\((\d+)\)$", line)
+        if not m:
+            continue
+        indent, node = len(line) - len(line.lstrip(" :|+-")), int(m.group(1))
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        if stack:
+            parent[node] = stack[-1][1]
+        stack.append((indent, node))
+    details = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=\n\n|\Z)", plan, re.MULTILINE | re.DOTALL)
+    }
+    out = []
+    for node, text in details.items():
+        m = re.search(r"^\(\d+\) Generate.*?^Arguments: \w+\((split\()", text, re.MULTILINE | re.DOTALL)
+        if not m:
+            continue
+        tokenizer = _balanced(text, m.start(1))
+        up = parent.get(node)
+        while up is not None:
+            if tokenizer in details.get(up, ""):
+                out.append(re.sub(r"#\d+L?", "", tokenizer))
+                break
+            up = parent.get(up)
+    return sorted(set(out))

@@ -337,29 +337,19 @@ def q_llm_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the division-only twin of PMI (ln is libm-banned on oracle paths;
     lift preserves PMI's ranking exactly). The corpus-statistics probe
     behind tokenizer-merge candidates, stopword-phrase detection, and
-    boilerplate discovery. Bigram generation is the codegen
-    posexplode + window-lead idiom (shingle_sets' pattern, pinned
-    repartition against the AQE one-partition trap); counts are exact
+    boilerplate discovery. Bigrams are the full 2-token
+    :func:`operators.text.token_windows` of the lower-cased text (no
+    shuffle); tokens never contain the joining space, so the window
+    splits back into (w, w2) at its only space. Counts are exact
     integers, lift is one IEEE division; a count floor (>= 5) plus
     (lift, w, w2) ordering makes the top-20 deterministic."""
-    from pyspark.sql import Window as W
-
     from kafka_streams_clojure_spark.operators._cache import persist_if_uncached
 
     docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split(F.lower("text"), r"\s+")).alias("pos", "w"),
-        )
-        .repartition(par, "doc_id")
-    )
-    w_ = W.partitionBy("doc_id").orderBy("pos")
     b = persist_if_uncached(
-        toks.withColumn("w2", F.lead("w").over(w_))
-        .filter(F.col("w2").isNotNull())
-        .select("w", "w2")
+        TX.token_windows(docs, 2, text=F.lower("text"))
+        .filter(F.col("pos") + 2 <= F.col("n"))
+        .select(F.col("tok").alias("w"), F.substring_index("window", " ", -1).alias("w2"))
     )
     tot = b.agg(F.count("*").alias("n_tot"))
     ul = b.groupBy("w").agg(F.count("*").alias("n_w"))
@@ -2478,33 +2468,23 @@ def q_llm_boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_llm_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact PHRASE search ("table hash" as adjacent tokens) — the
     positional-index query single-token retrieval can't answer. Spark
-    side: posexplode + a per-doc lead window (the shingle_sets codegen
-    idiom — positions are free); the oracle reconstructs positions
-    with generate_subscripts (DuckDB lacks WITH ORDINALITY) and joins
-    pos+1. Returns (doc_id, n_hits, first_pos). At scale the phrase
-    probe runs against a stored positional posting list for the rarer
-    term, not a corpus re-tokenization — same plan shape, indexed
-    input."""
-    from pyspark.sql import Window as W
-
+    side: the 2-token :func:`operators.text.token_windows` (positions
+    are free, no shuffle before the per-doc count); the oracle
+    reconstructs positions with generate_subscripts (DuckDB lacks WITH
+    ORDINALITY) and joins pos+1. Tokens never contain the joining
+    space, so the window equals "table hash" exactly when the token is
+    "table" and the next one "hash". Returns (doc_id, n_hits,
+    first_pos). At scale the phrase probe runs against a stored
+    positional posting list for the rarer term, not a corpus
+    re-tokenization — same plan shape, indexed input."""
     docs = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = docs.select(
-        "doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("pos0", "tok")
-    ).repartition(par, "doc_id")
-    w = W.partitionBy("doc_id").orderBy("pos0")
-    pairs = toks.select(
-        "doc_id",
-        (F.col("pos0") + 1).cast("bigint").alias("pos"),
-        "tok",
-        F.lead("tok").over(w).alias("nxt"),
-    )
     return (
-        pairs.filter((F.col("tok") == "table") & (F.col("nxt") == "hash"))
+        TX.token_windows(docs, 2)
+        .filter(F.col("window") == "table hash")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_hits"),
-            F.min("pos").cast("bigint").alias("first_pos"),
+            F.min(F.col("pos") + 1).cast("bigint").alias("first_pos"),
         )
     )
 

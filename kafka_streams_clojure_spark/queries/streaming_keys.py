@@ -589,10 +589,11 @@ def q_udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     beat it 10-100×): it exists as API-surface parity for logic that
     genuinely can't be a builtin, and the key bounds its input
     (doc_id < 40; pushed to the parquet scan) the way any production
-    use must bound or batch it. The codegen twin for THIS exact
-    expansion is the posexplode path in operators/dedup.shingle_sets —
-    that's what the hot dedup keys use. Splitting on the single-space
-    token separator matches the oracle's string_split exactly.
+    use must bound or batch it. The codegen form of this expansion is
+    operators/text.token_windows (one explode per row, tokens read from
+    the split array by index) — that's what the hot dedup keys use.
+    Splitting on the single-space token separator matches the oracle's
+    string_split exactly.
     """
     from pyspark.sql.functions import udtf
 

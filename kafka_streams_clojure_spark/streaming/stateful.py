@@ -17,6 +17,7 @@ state (api.clj:41-45). Spark mapping, by the shape of the fold:
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterator
 from typing import Any
 
@@ -24,6 +25,31 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# pyspark's applyInPandasWithState serializer pads every output batch
+# with all-None frames and then calls pd.concat, which makes pandas 2.x
+# print this deprecation on every batch of the state machines below.
+# The call is in pyspark, not here. Only this message, from that module,
+# is silenced; _StateFunc carries the filter into the Python workers.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries",
+    category=FutureWarning,
+    module=r"pyspark\.sql\.pandas\.serializers",
+)
+
+
+class _StateFunc:
+    """An ``applyInPandasWithState`` function that pickles by reference
+    to this module, so a Python worker imports the module — and runs the
+    warning filter above — when it unpickles the function. The nested
+    ``update`` closures alone are pickled by value and import nothing."""
+
+    def __init__(self, update) -> None:
+        self.update = update
+
+    def __call__(self, key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        return self.update(key, pdfs, state)
 
 
 def running_counter(
@@ -147,7 +173,7 @@ def stateful_asof_join(
         .select(key_col, side_col, ts_col, id_col, value_col)
         .groupBy(key_col)
         .applyInPandasWithState(
-            update,
+            _StateFunc(update),
             outputStructType=(
                 f"key {key_type}, left_id long, left_value double, right_value double"
             ),
@@ -217,7 +243,7 @@ def funnel_state(
         .select(key_col, type_col, ts_col, id_col)
         .groupBy(key_col)
         .applyInPandasWithState(
-            update,
+            _StateFunc(update),
             outputStructType=f"key {key_type}, stage int",
             stateStructType="t1 long, t2 long, t3 long",
             outputMode="update",
@@ -327,7 +353,7 @@ def punctuate_flush(
         events.select(*cols)
         .groupBy(key_col)
         .applyInPandasWithState(
-            update,
+            _StateFunc(update),
             outputStructType=f"key {key_type}, n long, total double, fired_at_ms long",
             stateStructType="n long, total double, next_fire long",
             outputMode="append",
@@ -411,7 +437,7 @@ def scd2_state(
         .select(key_col, type_col, ts_col, id_col)
         .groupBy(key_col)
         .applyInPandasWithState(
-            update,
+            _StateFunc(update),
             outputStructType=(
                 f"key {key_type}, state string, valid_from_us long, "
                 "valid_to_us long, n_events long"
@@ -464,7 +490,7 @@ def capped_sessionizer(
 
     key_type = dict(events.dtypes)[key_col]
     return events.groupBy(key_col).applyInPandasWithState(
-        update,
+        _StateFunc(update),
         outputStructType=(
             f"user_id {key_type}, sess_idx long, start_us long, "
             "end_us long, n_events long"

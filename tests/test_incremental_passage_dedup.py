@@ -40,11 +40,36 @@ def test_passage_dedup_drops_shared_keeps_unique(spark):
 
 
 def test_passage_dedup_preserves_order_and_tail(spark):
+    """Order and the short tail passage, then passage_table and
+    passage_dedup against a pure-Python reference on the token-window
+    edge cases; passage_table plans no shuffle at all."""
+    from kafka_streams_clojure_spark.operators.dedup import passage_table
+    from tests.test_llm_ops import _edge_docs, _split_ref
+
     words = [f"w{i}" for i in range(23)]  # 2 full passages + 3-word tail
-    docs = _mk_docs(spark, [(1, " ".join(words))])
-    out = passage_dedup(docs).collect()[0]
-    assert out.clean_text == " ".join(words)  # unique passages: identity
-    assert out.n_kept == 3 and out.n_dropped == 0
+    rows = [(1, " ".join(words))] + _edge_docs(10)
+    docs = _mk_docs(spark, rows)
+    out = {r.doc_id: (r.clean_text, r.n_kept, r.n_dropped) for r in passage_dedup(docs).collect()}
+    assert out[1] == (" ".join(words), 3, 0)  # unique passages: identity
+
+    table = passage_table(docs)
+    plan = physical_plan(table)
+    assert "Exchange" not in plan and "Window" not in plan, plan
+    chunks: dict[int, list[str]] = {}
+    for i, text in rows:
+        if text is not None:
+            toks = _split_ref(text)
+            chunks[i] = [" ".join(toks[p : p + 10]) for p in range(0, len(toks), 10)]
+    got = {(r.doc_id, r.pidx, r.passage) for r in table.collect()}
+    assert got == {(i, j, c) for i, cs in chunks.items() for j, c in enumerate(cs)}
+    dfreq: dict[str, set[int]] = {}
+    for i, cs in chunks.items():
+        for c in cs:
+            dfreq.setdefault(c, set()).add(i)
+    for i, cs in chunks.items():
+        keep = [c for c in cs if len(dfreq[c]) <= 1]
+        assert out[i] == (" ".join(keep), len(keep), len(cs) - len(keep)), i
+    assert set(out) == set(chunks)
 
 
 def test_passage_dedup_within_doc_repeat_not_boilerplate(spark):

@@ -34,6 +34,48 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").persist()
 
 
+#: A 1,000-token document: the phrase "table hash" every 10 tokens,
+#: filler pairs that repeat often enough for the collocation floor.
+_LONG_DOC = " ".join(
+    "table" if i % 10 == 0 else "hash" if i % 10 == 1 else f"w{i % 7}"
+    for i in range(1000)
+)
+
+
+def _edge_docs(k: int) -> list[tuple[int, str | None]]:
+    """Token-window edge cases for window width ``k``: null and empty
+    text, leading/trailing/repeated whitespace, exactly k and k + 1
+    tokens, a 1,000-token document, and a doc_id that occurs twice (its
+    second row has null text)."""
+    return [
+        (901, None),
+        (902, ""),
+        (903, "  table hash\t\tw1  w2 "),
+        (904, " ".join(f"e{i}" for i in range(k))),
+        (905, " ".join(f"e{i}" for i in range(k + 1))),
+        (906, _LONG_DOC),
+        (907, "Table Hash table hash w1 w2"),
+        (907, None),
+    ]
+
+
+def _split_ref(text: str) -> list[str]:
+    """Python twin of ``split(text, '\\s+')``: Java's split with limit
+    -1 keeps the leading and trailing empty tokens, as ``re.split``
+    does; ASCII ``\\s`` is Java's whitespace class."""
+    import re
+
+    return re.split(r"\s+", text, flags=re.ASCII)
+
+
+def _plan_has_no_token_shuffle(df) -> None:
+    from kafka_streams_clojure_spark.plans import physical_plan
+
+    plan = physical_plan(df)
+    assert "Window" not in plan, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_minhash_lsh_finds_exact_duplicates(docs):
     """Exact duplicate texts have Jaccard 1.0 → every exact-dup pair
     MUST be found by LSH (identical signatures collide in all bands).
@@ -509,7 +551,9 @@ def test_repetition_stats_known_values(spark):
         ],
         "doc_id long, text string",
     )
-    out = {int(r.doc_id): r for r in repetition_stats(df).collect()}
+    stats = repetition_stats(df)
+    _plan_has_no_token_shuffle(stats)
+    out = {int(r.doc_id): r for r in stats.collect()}
     assert set(out) == {1, 2}
     assert abs(out[1].dup_token_ratio - (1 - 2 / 5)) < 1e-12
     assert abs(out[1].top_bigram_frac - 2 / 4) < 1e-12
@@ -603,12 +647,12 @@ def test_embedding_near_dup_block_guard_lsh_fallback(skewed_blocks):
 
 
 def test_shingle_sets_post_agg_union(spark):
-    """r12 optimization guard: unioning the pre-aggregated short-doc
-    side AFTER the windowed side's collect_set (one exchange instead of
-    two) must keep shingle_sets' exact output contract — long docs get
-    distinct k-shingles with the full set size, short (<= k tokens)
-    docs get their whole text as ONE shingle with set_size 1, null-text
-    docs get NO rows."""
+    """shingle_sets' output contract: long docs get distinct
+    k-shingles with the full set size, short (<= k tokens) docs get
+    their whole text as ONE shingle with set_size 1, null-text docs get
+    NO rows, and rows sharing an id share one set — checked by hand and
+    against a pure-Python reference on the token-window edge cases. The
+    plan has no window function and no pinned repartition."""
     from kafka_streams_clojure_spark.operators.dedup import shingle_sets
 
     rows = [
@@ -617,11 +661,10 @@ def test_shingle_sets_post_agg_union(spark):
         (3, None),                   # null text -> no rows
         (4, "r r r r r r r"),        # repeated token -> 1 distinct shingle
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (int(r.doc_id), int(r.set_size), r.shingle)
-        for r in shingle_sets(df).collect()
-    }
+    df = spark.createDataFrame(rows + _edge_docs(4), "doc_id long, text string")
+    out = shingle_sets(df)
+    _plan_has_no_token_shuffle(out)
+    got = {(int(r.doc_id), int(r.set_size), r.shingle) for r in out.collect()}
     want = {
         (1, 3, "a b c d"),
         (1, 3, "b c d e"),
@@ -629,7 +672,76 @@ def test_shingle_sets_post_agg_union(spark):
         (2, 1, "x y"),
         (4, 1, "r r r r"),
     }
-    assert got == want, f"diff: got-want={got - want}, want-got={want - got}"
+    assert {g for g in got if g[0] < 900} == want
+    sets: dict[int, set[str]] = {}
+    for i, text in rows + _edge_docs(4):
+        if text is None:
+            continue
+        toks = _split_ref(text)
+        starts = range(max(len(toks) - 4, 0) + 1)
+        sets.setdefault(i, set()).update(" ".join(toks[p : p + 4]) for p in starts)
+    ref = {(i, len(sh), w) for i, sh in sets.items() for w in sh}
+    assert got == ref, f"diff: got-ref={got - ref}, ref-got={ref - got}"
+
+
+def _edge_docs_dir(tmp_path, k: int) -> str:
+    """A documents.parquet of :func:`_edge_docs` for the query keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids, texts = zip(*_edge_docs(k))
+    table = pa.table({"doc_id": pa.array(ids, pa.int64()), "text": pa.array(texts, pa.string())})
+    pq.write_table(table, tmp_path / "documents.parquet")
+    return str(tmp_path)
+
+
+def test_phrase_search_edge_docs(spark, tmp_path):
+    """q_llm_phrase_search against a pure-Python reference on the
+    token-window edge cases; its plan has no window function and no
+    pinned repartition."""
+    import __spark_entry__ as entrymod
+
+    out = entrymod.queries()["q_llm_phrase_search"](spark, _edge_docs_dir(tmp_path, 2))
+    _plan_has_no_token_shuffle(out)
+    got = {int(r.doc_id): (int(r.n_hits), int(r.first_pos)) for r in out.collect()}
+    hits: dict[int, list[int]] = {}
+    for i, text in _edge_docs(2):
+        if text is None:
+            continue
+        toks = _split_ref(text)
+        for p in range(len(toks) - 1):
+            if toks[p : p + 2] == ["table", "hash"]:
+                hits.setdefault(i, []).append(p + 1)
+    assert got == {i: (len(ps), min(ps)) for i, ps in hits.items()}
+    assert got[906] == (100, 1) and got[903] == (1, 2)
+
+
+def test_collocations_edge_docs(spark, tmp_path):
+    """q_llm_collocations (top-20 lower-cased bigrams by lift, count
+    floor 5) against a pure-Python reference on the token-window edge
+    cases; its plan has no window function and no pinned
+    repartition."""
+    from collections import Counter
+
+    import __spark_entry__ as entrymod
+
+    out = entrymod.queries()["q_llm_collocations"](spark, _edge_docs_dir(tmp_path, 2))
+    _plan_has_no_token_shuffle(out)
+    got = [(r.w, r.w2, int(r.n_pair), r.lift) for r in out.collect()]
+    pairs = []
+    for _, text in _edge_docs(2):
+        if text is not None:
+            toks = _split_ref(text.lower())
+            pairs += zip(toks, toks[1:])
+    n_w = Counter(a for a, _ in pairs)
+    n_w2 = Counter(b for _, b in pairs)
+    ref = [
+        (a, b, n, (float(n) * float(len(pairs))) / (float(n_w[a]) * float(n_w2[b])))
+        for (a, b), n in Counter(pairs).items()
+        if n >= 5
+    ]
+    ref.sort(key=lambda r: (-r[3], r[0], r[1]))
+    assert got == ref[:20]
 
 
 def test_cosine_prefilter_equivalence(emb, spark):
@@ -1486,6 +1598,7 @@ def test_substring_dedup_planted_runs(spark):
     both docs; (c) an intra-doc repeat of a 10-token run loses its
     second occurrence only."""
     from kafka_streams_clojure_spark.operators.dedup import substring_dedup
+    from kafka_streams_clojure_spark.plans import physical_plan
 
     run12 = " ".join(f"r{i}" for i in range(12))
     run5 = " ".join(f"s{i}" for i in range(5))
@@ -1500,9 +1613,12 @@ def test_substring_dedup_planted_runs(spark):
         ],
         "doc_id long, text string",
     )
+    removal = substring_dedup(docs, k=3, min_run=8)
+    plan = physical_plan(removal)
+    assert "REPARTITION_BY_NUM" not in plan and "lead(" not in plan, plan
     out = {
         int(r.doc_id): (r.clean_text, int(r.n_removed), int(r.n_total))
-        for r in substring_dedup(docs, k=3, min_run=8).collect()
+        for r in removal.collect()
     }
     assert out[1] == (f"a0 a1 a2 {run12} a3 a4", 0, 17)
     assert out[2] == ("b0 b1 b2 b3 b4", 12, 17)

@@ -551,6 +551,7 @@ def test_winnowing_null_and_empty_text(spark):
     from kafka_streams_clojure_spark.operators.dedup import (
         winnowing_fingerprints,
     )
+    from kafka_streams_clojure_spark.plans import physical_plan
 
     df = spark.createDataFrame(
         [
@@ -560,8 +561,11 @@ def test_winnowing_null_and_empty_text(spark):
         ],
         "doc_id long, text string",
     )
+    out = winnowing_fingerprints(df)
+    plan = physical_plan(out)
+    assert "REPARTITION_BY_NUM" not in plan and "lead(" not in plan, plan
     fps = {}
-    for r in winnowing_fingerprints(df).collect():
+    for r in out.collect():
         fps.setdefault(int(r.doc_id), set()).add(int(r.fp))
     assert 2 not in fps, "null-text doc must emit no fingerprints"
     assert len(fps[3]) == 1, "empty text = one whole-text fingerprint"

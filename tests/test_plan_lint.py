@@ -1,14 +1,19 @@
 """Plan lint across the ENTIRE query registry: build (don't execute)
 every key's plan and reject scale-hostile shapes — accidental
-cartesian products and Python evaluation outside the declared UDF
-keys. This is the automated form of the `.explain` discipline."""
+cartesian products, Python evaluation outside the declared UDF keys,
+and a tokenizer re-evaluated for every row its generator emits. This
+is the automated form of the `.explain` discipline."""
 
 from __future__ import annotations
 
 import pytest
 
 import __spark_entry__ as entrymod
-from kafka_streams_clojure_spark.plans import physical_plan, unpartitioned_window_cols
+from kafka_streams_clojure_spark.plans import (
+    physical_plan,
+    retokenized_generates,
+    unpartitioned_window_cols,
+)
 
 _Q = entrymod.queries()
 
@@ -186,7 +191,8 @@ _PYTHON_OK = {
     "q_llm_dedup_reconcile",
     "q_llm_semdedup_threshold_curve",
     # true Python UDTF (§2.10 parity surface) — row-at-a-time by
-    # design, input bounded in the key; codegen twin = shingle_sets
+    # design, input bounded in the key; the codegen form of the same
+    # expansion is operators/text.token_windows
     "q_udtf_tokens",
     # Misra-Gries mapInPandas: Python touches <= capacity+batch
     # counters per batch, never the raw rows (operators/sketch.py)
@@ -212,6 +218,11 @@ def test_plan_is_scale_safe(name, spark, sf_dir):
         assert "EvalPython" not in plan, f"{name} runs Python outside the UDF keys"
         assert "FlatMapGroupsInPandas" not in plan, f"{name} unexpectedly uses pandas"
         assert "MapInPandas" not in plan, f"{name} unexpectedly uses mapInPandas"
+    retok = retokenized_generates(plan)
+    assert not retok, (
+        f"{name} evaluates {retok} above the Generate that explodes it "
+        f"(once per generated row) — use operators/text.token_windows"
+    )
 
 
 @pytest.mark.parametrize("name", sorted(set(_Q) - _SKIP - _GLOBAL_WINDOW_OK))
